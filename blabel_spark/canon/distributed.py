@@ -16,8 +16,8 @@ as ONE iterative join→groupBy loop over the whole corpus at once:
   message row and sorts into place);
 * components that reach a fixpoint leave the loop (their colours freeze);
 * components whose fixpoint does not discriminate every bnode (automorphic
-  residue) are finished by the branch-and-bound kernel from ``canon.local``
-  inside one ``applyInPandas`` call per component;
+  residue) are finished by the branch-and-bound kernel from ``canon.local``,
+  one call of the shared per-graph kernel runner per component;
 * order-insensitive hash folds (whole-graph hash, upg graph hash) are
   per-byte sums mod 256: numpy partial sums per Arrow batch, JVM merge;
 * optional ``salt_buckets`` switches the fold to a range-bucketed
@@ -36,11 +36,11 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 from itertools import count as _itercount
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from blabel_spark.hashing import MIN_LONG, enc_pair, get_hash_family
+from blabel_spark.kernel_runner import run_graph_kernel
 from blabel_spark.pair_kernels import (
     combine2_pairs_sql,
     combine3_pairs_sql,
@@ -120,14 +120,15 @@ class CanonResult:
 
 def _cc_kernel(btri: DataFrame) -> DataFrame:
     """Per-graph union-find — the reference's in-memory partition
-    (HashGraph.blankNodePartition, HashGraph.java:260-304) inside one
-    applyInPandas group per graph.  Right whenever single graphs fit a
-    task (the transcript north-star case: a graph is one conversation);
-    component id = minimum member bnode (pivot semantics)."""
+    (HashGraph.blankNodePartition, HashGraph.java:260-304), one call of
+    the shared per-graph kernel runner per graph.  Right whenever single
+    graphs fit a task (the transcript north-star case: a graph is one
+    conversation); component id = minimum member bnode (pivot
+    semantics)."""
     schema = "graph_id string, bnode string, comp string"
 
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        g = pdf["graph_id"].iloc[0]
+    def run(key: tuple, edges: list) -> list:
+        (g,) = key
         parent: dict[str, str] = {}
 
         def find(x: str) -> str:
@@ -136,7 +137,7 @@ def _cc_kernel(btri: DataFrame) -> DataFrame:
                 x = parent[x]
             return x
 
-        for s, o in zip(pdf["subj"], pdf["obj"]):
+        for s, o in edges:
             bs, bo = s.startswith("_:"), o.startswith("_:")
             if bs:
                 parent.setdefault(s, s)
@@ -153,11 +154,10 @@ def _cc_kernel(btri: DataFrame) -> DataFrame:
         for members in groups.values():
             m = min(members)
             rows.extend((g, n, m) for n in members)
-        return pd.DataFrame(rows, columns=["graph_id", "bnode", "comp"])
+        return rows
 
-    return (btri.select("graph_id", "subj", "obj")
-            .groupBy("graph_id").applyInPandas(run, schema)
-            .localCheckpoint(True))
+    return run_graph_kernel(btri.select("graph_id", "subj", "obj"), run,
+                            schema).localCheckpoint(True)
 
 
 def bnode_components(btri: DataFrame, max_iter: int = 64,
@@ -489,19 +489,18 @@ def _kernel_colors(btri_kernel: DataFrame,
                    hash_name: str = "md5") -> DataFrame:
     """Finish automorphic components with the local branch-and-bound kernel
     (GraphColouring.traverse + minimum-leaf selection, GraphColouring.java:
-    137-141,180-253), one applyInPandas group per (graph_id, comp)."""
+    137-141,180-253), one kernel-runner call per (graph_id, comp)."""
     schema = ("graph_id string, comp string, bnode string, "
               "h0 long, h1 long")
 
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
+    def run(key: tuple, rows: list) -> list:
         from blabel_spark.canon.local import (
             _Colouring, graph_sort_key, is_bnode)
         from blabel_spark.hashing import enc_pair, get_hash_family
         hf = get_hash_family(hash_name)
         BH = hf.blank
-        graph_id = pdf["graph_id"].iloc[0]
-        comp = pdf["comp"].iloc[0]
-        triples = sorted(set(zip(pdf["subj"], pdf["pred"], pdf["obj"])))
+        graph_id, comp = key
+        triples = sorted(set(rows))
         static: dict[str, bytes] = {}
         colors: dict[str, bytes] = {}
         for t in triples:
@@ -515,16 +514,12 @@ def _kernel_colors(btri_kernel: DataFrame,
         col.execute()
         best = min(col.leaves, key=graph_sort_key)
         leaf = col.leaves[best][0]
-        pairs = [enc_pair(c) for c in leaf.colors.values()]
-        return pd.DataFrame({
-            "graph_id": graph_id, "comp": comp,
-            "bnode": list(leaf.colors.keys()),
-            "h0": [p[0] for p in pairs],
-            "h1": [p[1] for p in pairs],
-        })
+        return [(graph_id, comp, n, *enc_pair(c))
+                for n, c in leaf.colors.items()]
 
-    return (btri_kernel.select("graph_id", "comp", "subj", "pred", "obj")
-            .groupBy("graph_id", "comp").applyInPandas(run, schema))
+    return run_graph_kernel(
+        btri_kernel.select("graph_id", "comp", "subj", "pred", "obj"),
+        run, schema, keys=("graph_id", "comp"))
 
 
 # ---------------------------------------------------------------------------
@@ -1181,7 +1176,8 @@ def canonicalize(spark: SparkSession, triples: DataFrame, *,
 # ---------------------------------------------------------------------------
 # per-graph kernel canonicalizer — the reference's per-document execution
 # shape (RunNQuadsTest.java:257-451): each graph is labelled whole by the
-# golden-tested local kernel inside one Arrow-batched applyInPandas group.
+# golden-tested local kernel, one call of the shared per-graph kernel
+# runner per graph (many graphs per Arrow batch, one task per core).
 # Used for hash families wider than 16 bytes (sha1/sha256/sha512, which do
 # not fit the int64-pair fixpoint representation) and available as a
 # general fallback; graphs are embarrassingly parallel across the cluster
@@ -1190,47 +1186,33 @@ def canonicalize(spark: SparkSession, triples: DataFrame, *,
 
 def canonicalize_by_graph(spark: SparkSession, triples: DataFrame, *,
                           hash_name: str = "md5", dip: bool = True,
-                          upg: bool = True, max_leaves: int | None = None,
-                          n_buckets: int | None = None) -> CanonResult:
+                          upg: bool = True, max_leaves: int | None = None
+                          ) -> CanonResult:
     out_schema = ("graph_id string, kind string, a string, b string, "
                   "c string")
 
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
+    def run(key: tuple, trips: list) -> list:
         from blabel_spark.canon.local import (
             HashCollisionError, SearchBudgetExceeded, label_graph)
-        rows = []
-        # one Arrow group carries MANY graphs (bucketed below) — per-graph
-        # scheduling overhead is amortized, essential when the corpus is
-        # millions of conversation-sized graphs
-        for g, gpdf in pdf.groupby("graph_id", sort=False):
-            trips = list(zip(gpdf["subj"], gpdf["pred"], gpdf["obj"]))
-            try:
-                res = label_graph(trips, dip=dip, upg=upg,
-                                  hash_name=hash_name,
-                                  max_leaves=max_leaves)
-            except (SearchBudgetExceeded, HashCollisionError) as e:
-                # a pathological graph must not sink the corpus job: pass
-                # its triples through unlabelled and report it, the
-                # reference's per-document timeout behaviour
-                # (RunNQuadsTest.java:296-320)
-                rows.extend((g, "t", s, p, o)
-                            for s, p, o in sorted(set(trips)))
-                rows.append((g, "e", type(e).__name__, str(e)[:200], ""))
-                continue
-            rows.extend((g, "t", s, p, o) for s, p, o in res.graph)
-            rows.extend((g, "l", n, "_:SK00" + c.hex(), "")
-                        for n, c in sorted(res.colors.items()))
-        return pd.DataFrame(rows,
-                            columns=["graph_id", "kind", "a", "b", "c"])
+        (g,) = key
+        try:
+            res = label_graph(trips, dip=dip, upg=upg, hash_name=hash_name,
+                              max_leaves=max_leaves)
+        except (SearchBudgetExceeded, HashCollisionError) as e:
+            # a pathological graph must not sink the corpus job: pass its
+            # triples through unlabelled and report it, the reference's
+            # per-document timeout behaviour (RunNQuadsTest.java:296-320)
+            rows = [(g, "t", s, p, o) for s, p, o in sorted(set(trips))]
+            rows.append((g, "e", type(e).__name__, str(e)[:200], ""))
+            return rows
+        rows = [(g, "t", s, p, o) for s, p, o in res.graph]
+        rows.extend((g, "l", n, "_:SK00" + c.hex(), "")
+                    for n, c in sorted(res.colors.items()))
+        return rows
 
-    if n_buckets is None:
-        n_buckets = int(spark.conf.get("spark.sql.shuffle.partitions")) * 4
     # no input dedupe needed: label_graph normalizes its group to a set
-    out = (triples.select(*TRIPLE_COLS)
-           .withColumn("_b", F.pmod(F.xxhash64("graph_id"),
-                                    F.lit(n_buckets)))
-           .groupBy("_b").applyInPandas(run, out_schema)
-           ).localCheckpoint(True)
+    out = run_graph_kernel(triples.select(*TRIPLE_COLS), run,
+                           out_schema).localCheckpoint(True)
     labelled = (out.where(F.col("kind") == "t")
                 .select("graph_id", F.col("a").alias("subj"),
                         F.col("b").alias("pred"), F.col("c").alias("obj")))

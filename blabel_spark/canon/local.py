@@ -75,21 +75,30 @@ def label_triples(triples: list[Triple], colors: dict[str, bytes]) -> tuple[Trip
     """Relabel bnodes as SK00<hex> and return the sorted distinct graph
     (GraphColouring.labelBlankNodes, GraphColouring.java:433-451).
 
-    ``colors`` holds exactly the blank nodes, so membership replaces the
-    per-term prefix test; rendered labels are memoized per colour (one
-    .hex() + concat per distinct bnode instead of per occurrence)."""
+    ``colors`` must hold every blank node; IRIs and literals pass through.
+    A blank node without a colour is an invariant violation and raises
+    ``KeyError`` rather than leaking an unlabelled bnode into the output.
+    Rendered labels are memoized per term (one .hex() + concat per
+    distinct bnode instead of per occurrence)."""
     rendered: dict[str, str] = {}
     pfx = "_:" + BNODE_LABEL_PREFIX
+
+    def render_term(t: str) -> str:
+        c = colors.get(t)
+        if c is not None:
+            return pfx + c.hex()
+        if is_bnode(t):
+            raise KeyError(f"blank node {t!r} has no colour")
+        return t
+
     out = set()
     for s, p, o in triples:
         ns = rendered.get(s)
         if ns is None:
-            cs = colors.get(s)
-            rendered[s] = ns = s if cs is None else pfx + cs.hex()
+            rendered[s] = ns = render_term(s)
         no = rendered.get(o)
         if no is None:
-            co = colors.get(o)
-            rendered[o] = no = o if co is None else pfx + co.hex()
+            rendered[o] = no = render_term(o)
         out.add((ns, p, no))
     return tuple(sorted(out))
 

@@ -3,10 +3,11 @@
 The reference processes corpora one document at a time through its leaning
 stack (RunNQuadsTest.java:257-451); the Spark translation keeps that shape:
 conversations/documents are embarrassingly parallel, each graph's core is
-computed whole-graph inside one Arrow-batched ``applyInPandas`` group.
-Leaning cannot be decomposed per bnode-component (a component can map into
-a DIFFERENT component of the same graph — e.g. an edge folding into a
-longer chain), so the group key is graph_id, not (graph_id, comp).
+computed whole-graph by one call of the shared per-graph kernel runner
+(``kernel_runner.run_graph_kernel``: many graphs per Arrow batch, one task
+per core).  Leaning cannot be decomposed per bnode-component (a component
+can map into a DIFFERENT component of the same graph — e.g. an edge folding
+into a longer chain), so the group key is graph_id, not (graph_id, comp).
 
 Escalation ladder, mirroring the reference's staged stack
 (GraphLeaning.java:121-140 trivial fixpoint → search):
@@ -16,7 +17,7 @@ Escalation ladder, mirroring the reference's staged stack
    guard so independently-accepted mappings cannot invalidate each
    other; shrinks graphs too large for one task before any kernel sees
    them (opt-in via ``prepass_rows``).
-2. the DFS kernel per graph (``applyInPandas``).
+2. the DFS kernel per graph (``run_graph_kernel``).
 3. graphs whose kernel search exceeds its budget re-route to the BFS
    join-chain solver (lean.bfs) — the partial-solution table is the
    distributed object.
@@ -24,9 +25,10 @@ Escalation ladder, mirroring the reference's staged stack
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from blabel_spark.kernel_runner import run_graph_kernel
 
 _OUT_SCHEMA = ("graph_id string, kind string, a string, b string, c string")
 
@@ -168,10 +170,9 @@ def trivial_prepass(spark: SparkSession, triples: DataFrame,
 
 
 def _kernel_fn(budget: int):
-    def _kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+    def _kernel(key: tuple, triples: list) -> list:
         from blabel_spark.lean.local import LeanBudgetExceeded, lean_graph
-        graph_id = pdf["graph_id"].iloc[0]
-        triples = list(zip(pdf["subj"], pdf["pred"], pdf["obj"]))
+        (graph_id,) = key
         rows = []
         try:
             res = lean_graph(triples, budget=budget)
@@ -188,8 +189,7 @@ def _kernel_fn(budget: int):
             for s, p, o in sorted(set(triples)):
                 rows.append((graph_id, "t", s, p, o))
             rows.append((graph_id, "w", "__budget_exceeded__", "", ""))
-        return pd.DataFrame(rows,
-                            columns=["graph_id", "kind", "a", "b", "c"])
+        return rows
     return _kernel
 
 
@@ -214,7 +214,7 @@ def lean_graphs(spark: SparkSession, triples: DataFrame,
     filter runs FIRST (the reference's staged stack runs its trivial
     stage unconditionally before search, GraphLeaning.java:121-140),
     shrinking oversized graphs before any kernel sees them; graphs
-    still over the threshold afterwards never enter ``applyInPandas``
+    still over the threshold afterwards never enter the kernel
     (a merely-huge graph would otherwise OOM one task) — they go to
     the BFS solver when their residual pattern count permits, else
     pass through flagged.  ``prepass=True``/``False`` forces the stage
@@ -255,9 +255,8 @@ def lean_graphs(spark: SparkSession, triples: DataFrame,
 
     small = tri if not n_big else \
         tri.join(F.broadcast(big_ids), "graph_id", "left_anti")
-    out = (small.groupBy("graph_id")
-           .applyInPandas(_kernel_fn(kernel_budget), _OUT_SCHEMA)
-           ).localCheckpoint(True)
+    out = run_graph_kernel(small, _kernel_fn(kernel_budget),
+                           _OUT_SCHEMA).localCheckpoint(True)
     lean = (out.where(F.col("kind") == "t")
             .select("graph_id", F.col("a").alias("subj"),
                     F.col("b").alias("pred"), F.col("c").alias("obj")))

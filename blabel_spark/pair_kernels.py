@@ -12,7 +12,8 @@ sign-flipped int64 columns (see hashing.py pairs section).  Consequences:
   32 cores because of per-row byte[]/bytes allocation on both sides);
 * the neighbourhood fold (A1) is a repartition+sortWithinPartitions and
   ONE mapInPandas pass: numpy segmented fold over contiguous key runs,
-  with carry of the trailing incomplete key across Arrow batches.
+  with carry of the trailing incomplete key across Arrow batches
+  (``kernel_runner.complete_groups``, shared with the per-graph kernels).
 """
 
 from __future__ import annotations
@@ -31,6 +32,7 @@ from blabel_spark.hashing import (
     pairs_to_lanes,
     segmented_fold_ordered,
 )
+from blabel_spark.kernel_runner import complete_groups
 
 PAIR = StructType([StructField("h0", LongType()), StructField("h1", LongType())])
 
@@ -298,9 +300,7 @@ _FOLD_SCHEMA = ("ck0 long, ck1 long, bk0 long, bk1 long, "
 
 
 def _fold_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    buf: pd.DataFrame | None = None
-
-    def emit(pdf: pd.DataFrame, seg_start: np.ndarray) -> pd.DataFrame:
+    for pdf, seg_start in complete_groups(batches, _KEY):
         m0, m1 = _np(pdf["m0"]), _np(pdf["m1"])
         lanes = pairs_to_lanes(m0, m1)
         folded = segmented_fold_ordered(seg_start, lanes)
@@ -320,31 +320,7 @@ def _fold_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         oh1[seg_id[prev]] = m1[prev]
         out["oh0"] = oh0
         out["oh1"] = oh1
-        return pd.DataFrame(out)
-
-    def seg_starts(pdf: pd.DataFrame) -> np.ndarray:
-        n = len(pdf)
-        changed = np.zeros(n, dtype=bool)
-        changed[0] = True
-        for c in _KEY:
-            v = pdf[c].to_numpy()
-            changed[1:] |= v[1:] != v[:-1]
-        return changed
-
-    for pdf in batches:
-        if buf is not None and len(buf):
-            pdf = pd.concat([buf, pdf], ignore_index=True)
-            buf = None
-        if not len(pdf):
-            continue
-        changed = seg_starts(pdf)
-        last = int(np.flatnonzero(changed)[-1])
-        buf = pdf.iloc[last:].reset_index(drop=True)
-        head = pdf.iloc[:last]
-        if len(head):
-            yield emit(head, changed[:last])
-    if buf is not None and len(buf):
-        yield emit(buf, seg_starts(buf))
+        yield pd.DataFrame(out)
 
 
 def fold_messages(msgs: DataFrame, num_partitions: int | None = None

@@ -160,8 +160,12 @@ def materialize_kg(spark: SparkSession, labelled: DataFrame,
     (written LAST — the commit point); returns the run id."""
     from pyspark.sql import functions as F
     run_id = uuid.uuid4().hex[:12]
+    # an explicit repartition on the bucket column (AQE never coalesces a
+    # fixed-count repartition): every core writes, and each bucket is
+    # written by one task, so each bucket directory holds one file
     out = labelled.withColumn(
-        "graph_bucket", F.pmod(F.xxhash64("graph_id"), F.lit(64)))
+        "graph_bucket", F.pmod(F.xxhash64("graph_id"), F.lit(64))
+    ).repartition(spark.sparkContext.defaultParallelism, "graph_bucket")
     write_table(out, f"{out_dir}/triples", partition_by=["graph_bucket"])
     m = lineage_metrics(labelled, triples_in, run_id, metrics_extra)
     write_table(m, f"{out_dir}/metrics")

@@ -75,9 +75,12 @@ def get_spark(app: str = "blabel-spark", cpus: int | None = None,
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        # keep post-shuffle parallelism at the core count: without these,
-        # AQE coalesces mid-size shuffles (~hundreds of MB) to the 64 MB
-        # advisory target — a handful of tasks — and extra cores idle
+        # coalesce toward the 1 MB minimum partition size instead of the
+        # advisory size, so mid-size shuffles (~hundreds of MB) keep many
+        # tasks.  This does NOT keep small post-shuffle stages at the core
+        # count: a shuffle under 1 MB still coalesces to 1 task.  Per-graph
+        # Python kernel stages get their parallelism from kernel_runner's
+        # explicit repartition, which AQE never coalesces
         .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
                 "true")
         .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "8m")

@@ -13,6 +13,7 @@ import pytest
 from blabel_spark.canon.local import (
     blank_node_components,
     label_graph,
+    label_triples,
     render,
 )
 
@@ -187,6 +188,18 @@ def test_no_bnodes_pass_through():
     res = label_graph(trips)
     assert set(res.graph) == set(trips)
     assert res.bnode_count == 0
+
+
+def test_label_triples_rejects_uncoloured_bnode():
+    """Every blank node must have a colour; IRIs and literals pass
+    through unchanged."""
+    colors = {"_:a": bytes(16)}
+    out = label_triples([("_:a", "<p>", "<u>"), ("<s>", "<q>", '"x"')],
+                        colors)
+    assert out == (("<s>", "<q>", '"x"'),
+                   ("_:SK00" + "00" * 16, "<p>", "<u>"))
+    with pytest.raises(KeyError, match="_:b"):
+        label_triples([("_:a", "<p>", "_:b")], colors)
 
 
 def test_components_split():

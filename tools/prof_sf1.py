@@ -2,7 +2,7 @@
 """Stage-level decomposition of the FULL sf1 (10x sf0.1) fixpoint via the
 Spark event log — prep/loop/leaf/comp_mux/mux job timeline at the first
 scale where the phase mix differs from sf0.1 (prep and comp_mux dominate
-there; CC alone measured <=10% of prep, tools/bench_cc_kernel.py).
+there; CC alone measured <=10% of prep, BENCH.md).
 
 Usage: SPARK_DRIVER_MEMORY=48g python tools/prof_sf1.py [cpus]
 """
