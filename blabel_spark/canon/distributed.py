@@ -34,11 +34,12 @@ component diameter, not corpus size.
 from __future__ import annotations
 
 from dataclasses import dataclass, field
-from itertools import count as _itercount
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from blabel_spark.ckpt_util import ckpt_rdd, release
 from blabel_spark.hashing import MIN_LONG, enc_pair, get_hash_family
 from blabel_spark.kernel_runner import run_graph_kernel
 from blabel_spark.pair_kernels import (
@@ -47,20 +48,22 @@ from blabel_spark.pair_kernels import (
     fold_messages,
     fold_pair_array_udf,
     hash_int_pair_udf_for,
-    md5_pair,
     pair_hex,
     term_pair_exprs,
     unordered_sum_pairs_sql,
 )
+from blabel_spark.trace import phase
 
 TRIPLE_COLS = ("graph_id", "subj", "pred", "obj")
-
-# per-call sequence for fixpoint job-group names (see the loop)
-_FIXPOINT_SEQ = _itercount()
+CK = ["ck0", "ck1"]  # interned component key
 
 
 def is_bnode_col(c):
     return F.col(c).startswith("_:")
+
+
+def _union_all(dfs: list) -> DataFrame | None:
+    return reduce(DataFrame.union, dfs) if dfs else None
 
 
 def _mb(df: DataFrame, n_rows: int | None, limit: int) -> DataFrame:
@@ -75,13 +78,6 @@ def _mb(df: DataFrame, n_rows: int | None, limit: int) -> DataFrame:
     if n_rows is not None and n_rows <= limit:
         return F.broadcast(df)
     return df
-
-
-# checkpoint-release helpers live in blabel_spark.ckpt_util (shared with
-# ops.dedup's cluster loop — ADVICE r5); the private aliases remain the
-# names this module's call sites and tests use
-from blabel_spark.ckpt_util import ckpt_rdd as _ckpt_rdd  # noqa: E402
-from blabel_spark.ckpt_util import release as _release  # noqa: E402
 
 
 @dataclass
@@ -102,13 +98,7 @@ class CanonResult:
         corpora: without it each finished canonicalize keeps
         corpus-scale state in the block manager until a driver full-GC
         lets the ContextCleaner collect it."""
-        for h in self._retained:
-            if h is None:
-                continue
-            try:
-                h.unpersist(blocking)
-            except Exception:  # pragma: no cover
-                pass
+        release(self._retained, blocking)
         self._retained = []
 
 
@@ -215,13 +205,13 @@ def bnode_components(btri: DataFrame, max_iter: int = 64,
                                    F.col("a0").alias("b0"),
                                    F.col("a1").alias("b1")))
     sym = sym.localCheckpoint(True)
-    sym_h = _ckpt_rdd(sym)
+    sym_h = ckpt_rdd(sym)
 
     comp = nodes.withColumn("comp", F.col("bnode")).localCheckpoint(True)
     # each round's state supersedes the previous round's checkpoint the
     # moment the changed-count job materializes it — release superseded
     # blocks immediately so the loop retains O(1) tables, not O(rounds)
-    prev_h = _ckpt_rdd(comp)
+    prev_h = ckpt_rdd(comp)
     pk0, pk1 = _ikey("graph_id", "comp")
     try:
         for _ in range(max_iter):
@@ -254,18 +244,18 @@ def bnode_components(btri: DataFrame, max_iter: int = 64,
                         .alias("changed"))
             ).localCheckpoint(False)
             n_changed = new.where("changed").count()
-            _release([prev_h])
-            prev_h = _ckpt_rdd(new)
+            release([prev_h])
+            prev_h = ckpt_rdd(new)
             comp = new.drop("changed")
             if n_changed == 0:
                 # the final comp table stays (it IS the return value); only
                 # the edge table dies with the loop
-                _release([sym_h])
+                release([sym_h])
                 return comp.drop("k0", "k1")
     except BaseException:
         # non-convergence (or any mid-loop failure) must not leak the
         # edge/round checkpoint blocks (ADVICE r5)
-        _release([sym_h, prev_h])
+        release([sym_h, prev_h])
         raise
     raise RuntimeError(
         f"bnode_components failed to converge in {max_iter} rounds — "
@@ -293,77 +283,82 @@ def _ikey(*cols) -> tuple:
 
 
 
-def _prepare_bnode_triples(triples: DataFrame, tp=md5_pair,
-                           broadcast_rows: int = 0,
-                           graph_rows_bound: int | None = None
+def _prepare_bnode_triples(triples: DataFrame, tp, broadcast_rows: int,
+                           graph_rows_bound: int, metrics: dict
                            ) -> tuple[DataFrame, DataFrame, DataFrame, int]:
-    """Split into (bnode-touching triples with comp, static hash pairs and
-    interned key columns, ground triples, bnode→comp table, n_bnodes).
+    """Prep phase: split into (checkpointed bnode-touching triples with comp,
+    static hash pairs and interned key columns, ground triples, bnode→comp
+    table, n_bnodes).
 
     btri columns beyond the triple: comp, (ck0, ck1) interned component
     key, (p0, p1) pred hash, (ss0, ss1)/(os0, os1) static term hashes when
     subj/obj is ground (null otherwise), (ks0, ks1)/(ko0, ko1) interned
     bnode keys when subj/obj is blank (null otherwise)."""
-    tri = triples.select(*TRIPLE_COLS)
-    has_b = is_bnode_col("subj") | is_bnode_col("obj")
-    ground = tri.where(~has_b)
-    btri = tri.where(has_b)
+    with phase("prep") as ph:
+        tri = triples.select(*TRIPLE_COLS)
+        has_b = is_bnode_col("subj") | is_bnode_col("obj")
+        ground = tri.where(~has_b)
+        btri = tri.where(has_b)
 
-    comp = bnode_components(btri, graph_rows_bound=graph_rows_bound)
-    # the bnode→comp table has one row per blank node (≪ triples): its
-    # count is the n_bnodes metric AND the broadcast decision for the
-    # decoration join below, which otherwise exchanges the whole btri set
-    n_bnodes = comp.count()
-    p0, p1 = tp(F.col("pred"))
-    s0, s1 = tp(F.col("subj"))
-    o0, o1 = tp(F.col("obj"))
-    c0, c1 = _ikey("graph_id", "comp")
-    k_s0, k_s1 = _ikey("graph_id", "subj")
-    k_o0, k_o1 = _ikey("graph_id", "obj")
-    # parallelism reset BEFORE the ten hash projections: the parquet scan
-    # yields few input partitions at small SF (6 at sf0.1), and since the
-    # comp decoration is a broadcast join nothing downstream would ever
-    # re-exchange — every tail scan of the checkpointed btri (edge build,
-    # per-triple hashes, relabel) would run at scan parallelism.  One
-    # round-robin exchange of the raw strings here buys core-count
-    # parallelism for the hash computation and every later btri pass.
-    # Gated (ADVICE r4): skip when the comp join will NOT broadcast (its
-    # shuffle re-exchanges btri on the join key anyway) or when the input
-    # already has full parallelism — both would make this a wasted full
-    # exchange of the raw triple strings at triple scale.  (Keying this
-    # exchange on (ck0, ck1) instead was tried and is USELESS: localCheckpoint
-    # under AQE captures UnknownPartitioning, so downstream aggregations
-    # cannot see the co-partitioning — the mux tail repartitions itself.)
-    parts = int(btri.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    comp_broadcasts = n_bnodes <= broadcast_rows
-    if comp_broadcasts and btri.rdd.getNumPartitions() < parts:
-        btri = btri.repartition(parts)
-    # decoration join on the INTERNED anchor key, not the (graph_id,
-    # anchor-string) pair: in the non-broadcast regime this join exchanges
-    # and compares the full btri set, and hashing/sorting two fixed-width
-    # longs is far cheaper than N3 strings (sf1 measured the string-keyed
-    # variant as the single largest prep job).  The anchor of a row is its
-    # subject when blank, else its (then necessarily blank) object, so the
-    # key reuses the k_s/k_o interning exprs computed for btri anyway.
-    ca0, ca1 = _ikey("graph_id", "bnode")
-    comp_keyed = comp.select(ca0.alias("_a0"), ca1.alias("_a1"), "comp")
-    ak0 = F.when(is_bnode_col("subj"), k_s0).otherwise(k_o0)
-    ak1 = F.when(is_bnode_col("subj"), k_s1).otherwise(k_o1)
-    btri = (
-        btri.withColumn("_a0", ak0).withColumn("_a1", ak1)
-        .join(_mb(comp_keyed, n_bnodes, broadcast_rows), ["_a0", "_a1"])
-        .drop("_a0", "_a1")
-        .withColumn("ck0", c0).withColumn("ck1", c1)
-        .withColumn("p0", p0).withColumn("p1", p1)
-        .withColumn("ss0", F.when(~is_bnode_col("subj"), s0))
-        .withColumn("ss1", F.when(~is_bnode_col("subj"), s1))
-        .withColumn("os0", F.when(~is_bnode_col("obj"), o0))
-        .withColumn("os1", F.when(~is_bnode_col("obj"), o1))
-        .withColumn("ks0", F.when(is_bnode_col("subj"), k_s0))
-        .withColumn("ks1", F.when(is_bnode_col("subj"), k_s1))
-        .withColumn("ko0", F.when(is_bnode_col("obj"), k_o0))
-        .withColumn("ko1", F.when(is_bnode_col("obj"), k_o1))
-    )
+        comp = bnode_components(btri, graph_rows_bound=graph_rows_bound)
+        # the bnode→comp table has one row per blank node (≪ triples): its
+        # count is the n_bnodes metric AND the broadcast decision for the
+        # decoration join below, which otherwise exchanges the whole btri set
+        n_bnodes = comp.count()
+        p0, p1 = tp(F.col("pred"))
+        s0, s1 = tp(F.col("subj"))
+        o0, o1 = tp(F.col("obj"))
+        c0, c1 = _ikey("graph_id", "comp")
+        k_s0, k_s1 = _ikey("graph_id", "subj")
+        k_o0, k_o1 = _ikey("graph_id", "obj")
+        # parallelism reset BEFORE the ten hash projections: the parquet scan
+        # yields few input partitions at small SF (6 at sf0.1), and since the
+        # comp decoration is a broadcast join nothing downstream would ever
+        # re-exchange — every tail scan of the checkpointed btri (edge build,
+        # per-triple hashes, relabel) would run at scan parallelism.  One
+        # round-robin exchange of the raw strings here buys core-count
+        # parallelism for the hash computation and every later btri pass.
+        # Gated (ADVICE r4): skip when the comp join will NOT broadcast (its
+        # shuffle re-exchanges btri on the join key anyway) or when the input
+        # already has full parallelism — both would make this a wasted full
+        # exchange of the raw triple strings at triple scale.  (Keying
+        # this exchange on (ck0, ck1) instead was tried and is USELESS:
+        # localCheckpoint under AQE captures UnknownPartitioning, so
+        # downstream aggregations cannot see the co-partitioning — the mux
+        # tail repartitions itself.)
+        parts = int(btri.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+        comp_broadcasts = n_bnodes <= broadcast_rows
+        if comp_broadcasts and btri.rdd.getNumPartitions() < parts:
+            btri = btri.repartition(parts)
+        # decoration join on the INTERNED anchor key, not the (graph_id,
+        # anchor-string) pair: in the non-broadcast regime this join exchanges
+        # and compares the full btri set, and hashing/sorting two fixed-width
+        # longs is far cheaper than N3 strings (sf1 measured the string-keyed
+        # variant as the single largest prep job).  The anchor of a row is its
+        # subject when blank, else its (then necessarily blank) object, so the
+        # key reuses the k_s/k_o interning exprs computed for btri anyway.
+        ca0, ca1 = _ikey("graph_id", "bnode")
+        comp_keyed = comp.select(ca0.alias("_a0"), ca1.alias("_a1"), "comp")
+        ak0 = F.when(is_bnode_col("subj"), k_s0).otherwise(k_o0)
+        ak1 = F.when(is_bnode_col("subj"), k_s1).otherwise(k_o1)
+        btri = (
+            btri.withColumn("_a0", ak0).withColumn("_a1", ak1)
+            .join(_mb(comp_keyed, n_bnodes, broadcast_rows), ["_a0", "_a1"])
+            .drop("_a0", "_a1")
+            .withColumn("ck0", c0).withColumn("ck1", c1)
+            .withColumn("p0", p0).withColumn("p1", p1)
+            .withColumn("ss0", F.when(~is_bnode_col("subj"), s0))
+            .withColumn("ss1", F.when(~is_bnode_col("subj"), s1))
+            .withColumn("os0", F.when(~is_bnode_col("obj"), o0))
+            .withColumn("os1", F.when(~is_bnode_col("obj"), o1))
+            .withColumn("ks0", F.when(is_bnode_col("subj"), k_s0))
+            .withColumn("ks1", F.when(is_bnode_col("subj"), k_s1))
+            .withColumn("ko0", F.when(is_bnode_col("obj"), k_o0))
+            .withColumn("ko1", F.when(is_bnode_col("obj"), k_o1))
+        )
+        btri = btri.localCheckpoint(True)
+        metrics["bnode_triples"] = btri.count()
+    metrics.update(n_bnodes=n_bnodes, **ph.flat())
     return btri, ground, comp, n_bnodes
 
 
@@ -523,27 +518,12 @@ def _kernel_colors(btri_kernel: DataFrame,
 
 
 # ---------------------------------------------------------------------------
-# the driver loop
+# the driver: canonicalize routes; the fixpoint runs as phase functions
+# (prep → colour loop → leaf → tail → relabel), each under trace.phase
 # ---------------------------------------------------------------------------
 
 DEFAULT_MAX_ITERATIONS = 64
 DEFAULT_SALT_BUCKETS = "auto"
-
-
-def _lazy_checkpoint_ok(spark: SparkSession) -> bool:
-    """Whether per-round LAZY localCheckpoints are sound on this session.
-
-    ``RDD.doCheckpoint`` recursion stops at the first checkpoint-marked
-    RDD unless ``spark.checkpoint.checkpointAllMarkedAncestors`` is set
-    (a static conf — ``spark_util.get_spark`` sets it): with two stacked
-    lazy checkpoints (colours under the convergence table) the inner one
-    would never truncate and per-round plans DOUBLE (diagnosed from event
-    logs in round 4: job stage counts growing ~3/round, "Broadcasting
-    large task binary" warnings).  On foreign sessions the loop falls
-    back to an eager (own-job) colour checkpoint — two jobs per round."""
-    return (spark.sparkContext.getConf().get(
-        "spark.checkpoint.checkpointAllMarkedAncestors", "false")
-        == "true")
 
 
 def _warn_by_graph_ignores(metrics: dict, checkpoint_dir, max_iterations,
@@ -606,58 +586,54 @@ def canonicalize(spark: SparkSession, triples: DataFrame, *,
     via broadcast when at most this many rows — above it every such join
     falls back to the co-partitioned exchange.  2M rows ≈ 100-300 MB
     broadcast, safe for ordinary executors; tune down for small ones.
+
+    Metrics: each phase (``total``; on the fixpoint also ``prep``,
+    ``loop``, ``leaf_kernel``, ``comp_mux``, ``mux``, ``relabel``) adds
+    ``t_<phase>_s``/``n_jobs_<phase>``/``n_stages_<phase>`` (a job counts
+    toward its innermost phase only, see trace.phase); ``iterations_log``
+    has one entry per colour round.
     """
-    import time as _time
-    _t0 = _time.time()
+    with phase("total") as total:
+        # F2 hash-family selection (-s, LabelRDFGraph.java:150-161): any
+        # 16-byte family rides the int64-pair engine; wider families (sha1/
+        # sha256/sha512) go through the per-graph kernel path instead
+        biggest = None
+        if get_hash_family(hash_name).n_bytes == 16:
+            # ONE probe pass serves P6 validation (bnode predicates fail
+            # loudly, as in the local oracle) and the routing decision
+            probe = (triples.groupBy("graph_id")
+                     .agg(F.count("*").alias("n"),
+                          F.max(F.when(is_bnode_col("pred"), 1).otherwise(0))
+                          .alias("badp"))
+                     .agg(F.max("n").alias("maxn"),
+                          F.max("badp").alias("badp"))
+                     .collect()[0])
+            if probe["badp"]:
+                raise ValueError("blank node in predicate position")
+            biggest = probe["maxn"] or 0
+        if biggest is None or route == "by_graph" or (
+                route == "auto" and checkpoint_dir is None
+                and biggest <= kernel_graph_rows):
+            res = canonicalize_by_graph(spark, triples, hash_name=hash_name,
+                                        dip=dip, upg=upg)
+            _warn_by_graph_ignores(res.metrics, checkpoint_dir,
+                                   max_iterations, salt_buckets)
+        else:
+            res = _fixpoint(spark, triples, biggest, hash_name, dip, upg,
+                            max_iterations, salt_buckets, broadcast_rows,
+                            checkpoint_dir, checkpoint_every)
+    if biggest is not None:
+        res.metrics["max_graph_rows"] = int(biggest)
+    res.metrics.update(total.flat())
+    return res
+
+
+def _fixpoint(spark, triples, biggest, hash_name, dip, upg, max_iterations,
+              salt_buckets, broadcast_rows, checkpoint_dir,
+              checkpoint_every) -> CanonResult:
+    """The distributed route: the phase functions below, in order."""
     metrics: dict = {}
-    # F2 hash-family selection (-s, LabelRDFGraph.java:150-161): any
-    # 16-byte family rides the int64-pair engine; wider families (sha1/
-    # sha256/sha512) go through the per-graph kernel path instead
-    hf = get_hash_family(hash_name)
-    if hf.n_bytes != 16:
-        res = canonicalize_by_graph(spark, triples, hash_name=hash_name,
-                                    dip=dip, upg=upg)
-        _warn_by_graph_ignores(res.metrics, checkpoint_dir, max_iterations,
-                               salt_buckets)
-        return res
-    # ONE probe pass serves P6 validation (bnode predicates fail loudly,
-    # as in the local oracle) and the routing decision
-    probe = (triples.groupBy("graph_id")
-             .agg(F.count("*").alias("n"),
-                  F.max(F.when(is_bnode_col("pred"), 1).otherwise(0))
-                  .alias("badp"))
-             .agg(F.max("n").alias("maxn"), F.max("badp").alias("badp"))
-             .collect()[0])
-    if probe["badp"]:
-        raise ValueError("blank node in predicate position")
-    biggest = probe["maxn"] or 0
-    metrics["max_graph_rows"] = int(biggest)
-    if route == "by_graph" or (
-            route == "auto" and checkpoint_dir is None
-            and biggest <= kernel_graph_rows):
-        res = canonicalize_by_graph(spark, triples, hash_name=hash_name,
-                                    dip=dip, upg=upg)
-        res.metrics.update(metrics)
-        res.metrics["t_total_s"] = round(_time.time() - _t0, 3)
-        _warn_by_graph_ignores(res.metrics, checkpoint_dir, max_iterations,
-                               salt_buckets)
-        return res
-
     tp = term_pair_exprs(hash_name)
-    blank_pair = enc_pair(hf.blank)
-    plus_pair = enc_pair(hf.plus)
-    minus_pair = enc_pair(hf.minus)
-    # duplicate-mux digest: pure codegen for md5 (hash_int_pair_sql),
-    # Arrow UDF only for the non-default 16-byte families
-    if hash_name == "md5":
-        from blabel_spark.pair_kernels import hash_int_pair_sql
-        mx_exprs = hash_int_pair_sql
-    else:
-        _udf = hash_int_pair_udf_for(hash_name)
-
-        def mx_exprs(c):
-            p = _udf(c)
-            return p.getField("h0"), p.getField("h1")
     # RDF graphs are triple SETS (the reference loads into HashGraph /
     # TreeSet structures), but a whole-corpus dropDuplicates here would
     # cost an extra full-input shuffle.  Set semantics are instead
@@ -666,169 +642,251 @@ def canonicalize(spark: SparkSession, triples: DataFrame, *,
     # graph/upg hash folds run over deduplicated per-triple hash rows,
     # the kernels normalize their groups to sets, and the labelled output
     # is dropDuplicates'd
-    triples = triples.select(*TRIPLE_COLS)
     btri, ground, node_comp, n_bnodes = _prepare_bnode_triples(
-        triples, tp, broadcast_rows, graph_rows_bound=biggest)
-    btri = btri.localCheckpoint(True)
+        triples, tp, broadcast_rows, biggest, metrics)
     # checkpoint-block bookkeeping: handles whose blocks back the FINAL
     # result (released only by CanonResult.unpersist) vs loop-era state
     # released the moment its last consumer materializes
-    result_handles = [_ckpt_rdd(btri), _ckpt_rdd(node_comp)]
-    metrics["bnode_triples"] = btri.count()
-    metrics["n_bnodes"] = n_bnodes
-    metrics["t_prep_s"] = round(_time.time() - _t0, 3)
-    _t0 = _time.time()
+    result_handles = [ckpt_rdd(btri), ckpt_rdd(node_comp)]
+    resolved, kernel_parts, loop_handles, resumed = _colour_loop(
+        spark, btri, node_comp, n_bnodes, biggest, hash_name, salt_buckets,
+        max_iterations, broadcast_rows, checkpoint_dir, checkpoint_every,
+        metrics)
+    leaf, n_leaf = _leaf(resolved, kernel_parts, loop_handles, hash_name,
+                         metrics)
+    if leaf is None:
+        # bnode-free corpus: the result references none of our state
+        release(result_handles)
+        empty = spark.createDataFrame(
+            [], "graph_id string, bnode string, label string")
+        return CanonResult(triples.select(*TRIPLE_COLS).dropDuplicates(),
+                           empty, metrics)
+    # per-component broadcast bound: exact after a fresh round 1; on a
+    # resumed run only the still-active count was seen, so fall back to
+    # the safe per-bnode upper bound (components ≤ bnodes)
+    n_comps = n_leaf if resumed else metrics["n_components"]
+    leaf_final, labels = _tail(btri, ground, node_comp, leaf, n_leaf,
+                               n_comps, n_bnodes, tp, hash_name, dip, upg,
+                               broadcast_rows, metrics)
+    result_handles.append(ckpt_rdd(leaf_final))
+    labelled = _relabel(btri, ground, leaf_final, n_leaf, broadcast_rows,
+                        metrics)
+    return CanonResult(labelled, labels, metrics,
+                       _retained=result_handles)
 
-    ckpt = None
-    restored = None
-    if checkpoint_dir:
-        from blabel_spark.sources.io import FixpointCheckpoint
-        ckpt = FixpointCheckpoint(spark, checkpoint_dir)
-        restored = ckpt.restore()
 
-    # set semantics for the message workload: the edge views dedupe per
-    # side (a static row can never equal a bnode→bnode row — the ot/ok
-    # nullability differs — so per-side dedup == dedup of the union) and
-    # each side materializes ONCE in its loop shape:
-    # * static messages are pre-combined to (ck, bk, m) — their value is
-    #   constant across rounds, and materializing the combine here keeps
-    #   the ~200-node combine3 lane tree OUT of every round's plan
-    #   analysis and map stage (round 5 recomputed it per round);
-    # * bnode→bnode edges are pre-partitioned on the colour lookup key:
-    #   when the colour table outgrows broadcast_rows, each round's
-    #   shuffle-hash join then exchanges only the (per-bnode, shrinking)
-    #   colour table — never this (triple-scale) side.
-    edges_raw = _edge_views(btri, plus_pair, minus_pair)
-    sm0, sm1 = combine3_pairs_sql("ot0", "ot1", "p0", "p1", "mk0", "mk1")
-    static_msgs = (
-        edges_raw.where(F.col("ot0").isNotNull())
-        .drop("ok0", "ok1").dropDuplicates()
-        .select("ck0", "ck1", "bk0", "bk1",
-                sm0.alias("m0"), sm1.alias("m1"))
-    ).localCheckpoint(True)
-    bb_edges = (
-        edges_raw.where(F.col("ot0").isNull())
-        .drop("ot0", "ot1").dropDuplicates()
-        .repartition(int(spark.conf.get("spark.sql.shuffle.partitions")),
-                     "ok0", "ok1")
-    ).localCheckpoint(True)
-    # loop-era checkpoints: dead once `leaf` (their last consumer)
-    # materializes
-    loop_handles = [_ckpt_rdd(static_msgs), _ckpt_rdd(bb_edges)]
+def _colour_loop(spark, btri, node_comp, n_bnodes, biggest, hash_name,
+                 salt_buckets, max_iterations, broadcast_rows,
+                 checkpoint_dir, checkpoint_every, metrics):
+    """Colour refinement to fixpoint.  Returns the discrete and kernel-bound
+    components' views, loop-era handles and whether the run resumed."""
+    hf = get_hash_family(hash_name)
+    with phase("loop") as ph:
+        ckpt = None
+        restored = None
+        if checkpoint_dir:
+            from blabel_spark.sources.io import FixpointCheckpoint
+            ckpt = FixpointCheckpoint(spark, checkpoint_dir)
+            restored = ckpt.restore()
 
-    if salt_buckets == "auto":
-        # hub probe: a bnode's per-round fold size == its message count,
-        # and degree ≤ 2 × its graph's rows — when even the biggest graph
-        # is below the salting threshold no bnode can be a hub and the
-        # probe is skipped outright.  Otherwise one aggregation over the
-        # checkpointed edge table decides whether the salted two-stage
-        # fold is worth its extra shuffle — degree-skewed hub entities
-        # are exactly the north_rule's "salted repartitioning" case, and
-        # the decision must not rely on a human noticing the skew.
-        if 2 * biggest < (1 << 17):
-            salt_buckets = 0
-            metrics["max_bnode_degree_bound"] = 2 * biggest
-        else:
-            deg = (static_msgs.select("bk0", "bk1")
-                   .union(bb_edges.select("bk0", "bk1"))
-                   .groupBy("bk0", "bk1")
-                   .agg(F.count("*").alias("n"))
-                   .agg(F.max("n").alias("m")).collect()[0]["m"]) or 0
-            metrics["max_bnode_degree"] = int(deg)
-            salt_buckets = 0 if deg < (1 << 17) else \
-                min(256, int(deg) >> 15)
-    metrics["salt_buckets"] = int(salt_buckets)
-
-    CK = ["ck0", "ck1"]
-    if restored is not None:
-        it, lab, conv_prev, res_df, kern_df = restored
-        metrics["resumed_from_iteration"] = it
-        resolved = [res_df] if res_df is not None else []
-        kernel_parts = [kern_df] if kern_df is not None else []
-        active = conv_prev.select(*CK).localCheckpoint(True)
-        loop_handles.append(_ckpt_rdd(active))
-        n_act = conv_prev.count()
-        n_lab_rows = lab.count()
-        prev_round = []
-    else:
-        # node_comp already holds exactly one row per (graph, bnode): the
-        # initial colour table is pure codegen over it — no distinct
-        # exchange over the edge endpoints
-        lc0, lc1 = _ikey("graph_id", "comp")
-        lb0, lb1 = _ikey("graph_id", "bnode")
-        lab = (
-            node_comp.select(lc0.alias("ck0"), lc1.alias("ck1"),
-                             lb0.alias("bk0"), lb1.alias("bk1"))
-            .withColumn("h0", F.lit(blank_pair[0]))
-            .withColumn("h1", F.lit(blank_pair[1]))
+        # set semantics for the message workload: the edge views dedupe per
+        # side (a static row can never equal a bnode→bnode row — the ot/ok
+        # nullability differs — so per-side dedup == dedup of the union) and
+        # each side materializes ONCE in its loop shape:
+        # * static messages are pre-combined to (ck, bk, m) — their value is
+        #   constant across rounds, and materializing the combine here keeps
+        #   the ~200-node combine3 lane tree OUT of every round's plan
+        #   analysis and map stage (round 5 recomputed it per round);
+        # * bnode→bnode edges are pre-partitioned on the colour lookup key:
+        #   when the colour table outgrows broadcast_rows, each round's
+        #   shuffle-hash join then exchanges only the (per-bnode, shrinking)
+        #   colour table — never this (triple-scale) side.
+        edges_raw = _edge_views(btri, enc_pair(hf.plus), enc_pair(hf.minus))
+        sm0, sm1 = combine3_pairs_sql("ot0", "ot1", "p0", "p1", "mk0", "mk1")
+        static_msgs = (
+            edges_raw.where(F.col("ot0").isNotNull())
+            .drop("ok0", "ok1").dropDuplicates()
+            .select("ck0", "ck1", "bk0", "bk1",
+                    sm0.alias("m0"), sm1.alias("m1"))
         ).localCheckpoint(True)
+        bb_edges = (
+            edges_raw.where(F.col("ot0").isNull())
+            .drop("ot0", "ot1").dropDuplicates()
+            .repartition(int(spark.conf.get("spark.sql.shuffle.partitions")),
+                         "ok0", "ok1")
+        ).localCheckpoint(True)
+        # loop-era checkpoints: dead once `leaf` (their last consumer)
+        # materializes
+        loop_handles = [ckpt_rdd(static_msgs), ckpt_rdd(bb_edges)]
 
-        conv_prev = lab.groupBy(*CK).agg(F.lit(1).alias("prev_nc"))
-        # round 1 is the initial colour table's only consumer: retire it
-        # with that round like any other superseded round state
-        prev_round = [(_ckpt_rdd(lab), False)]
-        # free upper bound for round-1 broadcast decisions (components ≤
-        # bnodes); the exact count lands in metrics after round 1
-        n_act = n_bnodes
-        n_lab_rows = n_bnodes
+        if salt_buckets == "auto":
+            # hub probe: a bnode's per-round fold size == its message
+            # count, and degree ≤ 2 × its graph's rows — when even the
+            # biggest graph is below the salting threshold no bnode can be
+            # a hub and the probe is skipped outright.  Otherwise one
+            # aggregation over the checkpointed edge table decides whether
+            # the salted two-stage fold is worth its extra shuffle —
+            # degree-skewed hub entities are exactly the north_rule's
+            # "salted repartitioning" case, and the decision must not rely
+            # on a human noticing the skew.
+            if 2 * biggest < (1 << 17):
+                salt_buckets = 0
+                metrics["max_bnode_degree_bound"] = 2 * biggest
+            else:
+                deg = (static_msgs.select("bk0", "bk1")
+                       .union(bb_edges.select("bk0", "bk1"))
+                       .groupBy("bk0", "bk1")
+                       .agg(F.count("*").alias("n"))
+                       .agg(F.max("n").alias("m")).collect()[0]["m"]) or 0
+                metrics["max_bnode_degree"] = int(deg)
+                salt_buckets = 0 if deg < (1 << 17) else \
+                    min(256, int(deg) >> 15)
+        metrics["salt_buckets"] = int(salt_buckets)
 
-        resolved: list[DataFrame] = []
-        kernel_parts: list[DataFrame] = []
-        active = None  # None = every component is active
-        it = 0
-    metrics["n_components"] = n_act
-    # per-iteration observability: one entry per round with component
-    # status counts and wall times (the "per-partition lineage + metrics"
-    # north_rule line, at fixpoint granularity)
-    iter_log: list[dict] = []
-    _sc = spark.sparkContext
-    # per-CALL nonce in the job-group name: statusTracker matches groups
-    # by string over the whole application, so a bare "it{N}" collides
-    # with every earlier canonicalize in the session and inflates the
-    # recorded job/stage counts for early rounds (prior runs all have a
-    # round N, fewer reach round N+5 — the decaying-counts signature)
-    _run_tag = next(_FIXPOINT_SEQ)
-    while True:
-        it += 1
-        _it_t0 = _time.time()
-        # every job this round fires (eager-fallback checkpoint + status
-        # collect, or just the collect on the lazy path) runs under a
-        # per-round job group: iterations_log records the round's job and
-        # stage counts, which MUST stay flat across rounds — growth is the
-        # lazy-checkpoint lineage bug (see _lazy_checkpoint_ok), and the
-        # regression test pins exactly this invariant.
-        _grp = f"blabel-fixpoint-r{_run_tag}-it{it}"
-        # setJobGroup clobbers three thread-local properties — snapshot
-        # and restore ALL of them, not just the group id, so a caller's
-        # job description / interruptOnCancel survive the loop (ADVICE r5)
-        _prev_props = {p: _sc.getLocalProperty(p) for p in (
-            "spark.jobGroup.id", "spark.job.description",
-            "spark.job.interruptOnCancel")}
-        _sc.setJobGroup(_grp, "colour-refinement round")
+        if restored is not None:
+            it, lab, conv_prev, res_df, kern_df = restored
+            metrics["resumed_from_iteration"] = it
+            resolved = [res_df] if res_df is not None else []
+            kernel_parts = [kern_df] if kern_df is not None else []
+            active = conv_prev.select(*CK).localCheckpoint(True)
+            loop_handles.append(ckpt_rdd(active))
+            n_act = conv_prev.count()
+            n_lab_rows = lab.count()
+            prev_round = []
+        else:
+            # node_comp already holds exactly one row per (graph, bnode): the
+            # initial colour table is pure codegen over it — no distinct
+            # exchange over the edge endpoints
+            blank_pair = enc_pair(hf.blank)
+            lc0, lc1 = _ikey("graph_id", "comp")
+            lb0, lb1 = _ikey("graph_id", "bnode")
+            lab = (
+                node_comp.select(lc0.alias("ck0"), lc1.alias("ck1"),
+                                 lb0.alias("bk0"), lb1.alias("bk1"))
+                .withColumn("h0", F.lit(blank_pair[0]))
+                .withColumn("h1", F.lit(blank_pair[1]))
+            ).localCheckpoint(True)
+
+            conv_prev = lab.groupBy(*CK).agg(F.lit(1).alias("prev_nc"))
+            # round 1 is the initial colour table's only consumer: retire it
+            # with that round like any other superseded round state
+            prev_round = [(ckpt_rdd(lab), False)]
+            # free upper bound for round-1 broadcast decisions (components ≤
+            # bnodes); the exact count lands in metrics after round 1
+            n_act = n_bnodes
+            n_lab_rows = n_bnodes
+
+            resolved: list[DataFrame] = []
+            kernel_parts: list[DataFrame] = []
+            active = None  # None = every component is active
+            it = 0
+        metrics["n_components"] = n_act
+        # per-iteration observability: one entry per round with component
+        # status counts, wall time and the round's job/stage counts, which
+        # MUST stay flat across rounds — growth is lineage leaking through
+        # the lazy checkpoints, and the regression test pins exactly this
+        iter_log: list[dict] = []
+        while True:
+            it += 1
+            new_lab, conv, crows, rph = _colour_round(
+                static_msgs, bb_edges, lab, conv_prev, active, n_act,
+                n_lab_rows, salt_buckets, broadcast_rows)
+            counts = {r["status"]: int(r["n"]) for r in crows}
+            bcounts = {r["status"]: int(r["b"]) for r in crows}
+            if it == 1 and restored is None:
+                metrics["n_components"] = sum(counts.values())
+            iter_log.append({"iteration": it,
+                             "t_round_s": round(rph.wall_s, 3),
+                             "n_jobs": rph.n_jobs,
+                             "n_stages": rph.n_stages,
+                             **{f"n_{k}": v for k, v in counts.items()}})
+            done_comps = conv.where(F.col("status") == "discrete").select(*CK)
+            stall_comps = conv.where(F.col("status") == "stalled").select(*CK)
+
+            if counts.get("discrete"):
+                resolved.append(new_lab.drop("oh0", "oh1")
+                                .join(_mb(done_comps, counts["discrete"],
+                                          broadcast_rows), CK, "left_semi"))
+            if counts.get("stalled"):
+                kernel_parts.append(btri.join(
+                    _mb(stall_comps, counts["stalled"], broadcast_rows),
+                    CK, "left_semi"))
+
+            # the previous round's checkpoints are superseded the moment this
+            # round's status collect materializes the new pair: release them
+            # NOW unless a resolved/kernel view still reads them (those are
+            # consumed when `leaf` materializes) — the loop then retains O(1)
+            # round tables instead of O(rounds), which at corpus scale is the
+            # difference between a bounded block-manager footprint and
+            # memory-squeezing dead state for the rest of the session
+            for h, contributed in prev_round:
+                (loop_handles.append(h) if contributed else release([h]))
+            prev_round = [(ckpt_rdd(new_lab),
+                           bool(counts.get("discrete"))),
+                          (ckpt_rdd(conv),
+                           bool(counts.get("discrete"))
+                           or bool(counts.get("stalled")))]
+
+            n_active = counts.get("active", 0)
+            if n_active == 0 or it >= max_iterations:
+                if n_active and it >= max_iterations:
+                    # over-budget components fall back to the kernel (the
+                    # reference uses wall-clock timeouts per document,
+                    # RunNQuadsTest.java:76)
+                    kernel_parts.append(btri.join(
+                        _mb(conv.where(F.col("status") == "active")
+                            .select(*CK), n_active, broadcast_rows),
+                        CK, "left_semi"))
+                    metrics["over_budget_comps"] = n_active
+                break
+
+            active = conv.where(F.col("status") == "active").select(*CK)
+            # lazy view over the checkpointed new_lab: both consumers (message
+            # join, previous-colour rows) rescan it through a broadcast
+            # semi-join — cheaper than materializing a fourth table per round
+            lab = new_lab.drop("oh0", "oh1") \
+                .join(_mb(active, n_active, broadcast_rows), CK, "left_semi")
+            conv_prev = conv.where(F.col("status") == "active") \
+                .select(*CK, F.col("nc").alias("prev_nc"))
+            n_act = n_active
+            n_lab_rows = bcounts.get("active", 0)
+
+            if ckpt is not None and it % checkpoint_every == 0:
+                ckpt.commit(it, lab, conv_prev, _union_all(resolved),
+                            _union_all(kernel_parts))
+        # final-round tables feed the resolved/kernel views consumed by leaf
+        # (incl. the over-budget path's conv reference) — release them with
+        # the rest of the loop-era state once leaf has materialized
+        loop_handles.extend(h for h, _ in prev_round)
+    metrics.update(colour_iterations=it, iterations_log=iter_log,
+                   **ph.flat())
+    return resolved, kernel_parts, loop_handles, restored is not None
+
+
+def _colour_round(static_msgs, bb_edges, lab, conv_prev, active, n_act,
+                  n_lab_rows, salt_buckets, broadcast_rows):
+    """One refinement round under its own ``phase("round")``: messages →
+    fold → convergence audit, all run by ONE status collect.  Returns
+    (new colours, convergence table, status rows, the round's Phase)."""
+    with phase("round") as ph:
         sm = static_msgs if active is None else \
             static_msgs.join(_mb(active, n_act, broadcast_rows),
                              CK, "left_semi")
         msgs = _iteration_messages(sm, bb_edges, lab, n_lab_rows,
                                    broadcast_rows)
-        # ONE driver-sequenced job per round (was three: eager fold
-        # checkpoint + eager convergence checkpoint + status collect).
-        # Both checkpoints are LAZY: the single status collect below runs
-        # fold → audit → status as one job, materializing both tables'
-        # cached blocks for every later consumer; lineage still truncates
-        # at materialization, so plans stay constant-size across rounds.
+        # ONE driver-sequenced job per round.  Both checkpoints are LAZY:
+        # the single status collect below runs fold → audit → status as
+        # one job, materializing both tables' cached blocks for every later
+        # consumer; lineage still truncates at materialization (see
+        # checkpointAllMarkedAncestors in get_spark), so plans stay
+        # constant-size across rounds.
         # The reference's loop likewise does colouring + partition rebuild
         # + termination test in one in-memory pass per round
         # (GraphColouring.java:463-666) — this is its driver-barrier
         # analogue: iteration count scales with component diameter, so
         # per-round fixed latency is the loop's only serial section.
-        # CAUTION: lazy is only sound when doCheckpoint recurses past the
-        # first marked RDD (spark.checkpoint.checkpointAllMarkedAncestors,
-        # set by spark_util.get_spark) — otherwise the colour table under
-        # the marked convergence table would never truncate and per-round
-        # plans double in size; on foreign sessions fall back to an eager
-        # (own-job) colour checkpoint, i.e. two jobs per round.
         new_lab = _next_colors(msgs, lab, salt_buckets, n_lab_rows) \
-            .localCheckpoint(not _lazy_checkpoint_ok(spark))
+            .localCheckpoint(False)
 
         # convergence + refinement audit riding the fold output: the fold
         # passes each bnode's previous colour through (oh columns), so we
@@ -871,306 +929,227 @@ def canonicalize(spark: SparkSession, triples: DataFrame, *,
                         .when(F.col("nc") <= F.col("prev_nc"), "stalled")
                         .otherwise("active"))
         ).localCheckpoint(False)
+        crows = conv.groupBy("status") \
+            .agg(F.count("*").alias("n"), F.sum("nb").alias("b")).collect()
+    return new_lab, conv, crows, ph
 
-        try:
-            crows = conv.groupBy("status") \
-                .agg(F.count("*").alias("n"),
-                     F.sum("nb").alias("b")).collect()
-        finally:
-            for _p, _v in _prev_props.items():
-                _sc.setLocalProperty(_p, _v)
-        _st = _sc.statusTracker()
-        _jids = _st.getJobIdsForGroup(_grp)
-        _jinfos = [_st.getJobInfo(j) for j in _jids]
-        counts = {r["status"]: int(r["n"]) for r in crows}
-        bcounts = {r["status"]: int(r["b"]) for r in crows}
-        if it == 1 and restored is None:
-            metrics["n_components"] = sum(counts.values())
-        iter_log.append({"iteration": it,
-                         "t_round_s": round(_time.time() - _it_t0, 3),
-                         "n_jobs": len(_jids),
-                         "n_stages": sum(len(i.stageIds) for i in _jinfos
-                                         if i is not None),
-                         **{f"n_{k}": int(v) for k, v in counts.items()}})
-        done_comps = conv.where(F.col("status") == "discrete").select(*CK)
-        stall_comps = conv.where(F.col("status") == "stalled").select(*CK)
 
-        if counts.get("discrete"):
-            resolved.append(new_lab.drop("oh0", "oh1")
-                            .join(_mb(done_comps, counts["discrete"],
-                                      broadcast_rows), CK, "left_semi"))
-        if counts.get("stalled"):
-            kernel_parts.append(btri.join(
-                _mb(stall_comps, counts["stalled"], broadcast_rows),
-                CK, "left_semi"))
+def _leaf(resolved, kernel_parts, loop_handles, hash_name, metrics):
+    """Checkpointed leaf colours, distributed-discrete ∪ kernel output, and
+    their count; leaf is None for a bnode-free corpus."""
+    with phase("leaf_kernel") as ph:
+        parts = list(resolved)
+        if kernel_parts:
+            kc = _kernel_colors(_union_all(kernel_parts), hash_name)
+            c0, c1 = _ikey("graph_id", "comp")
+            b0, b1 = _ikey("graph_id", "bnode")
+            parts.append(kc.select(c0.alias("ck0"), c1.alias("ck1"),
+                                   b0.alias("bk0"), b1.alias("bk1"),
+                                   "h0", "h1"))
+        leaf, n_leaf = _union_all(parts), 0
+        if leaf is not None:
+            leaf = leaf.localCheckpoint(True)
+            n_leaf = leaf.count()
+        # leaf (just materialized) was the last consumer of every loop-era
+        # table: the edge tables, the initial colours and each round's
+        # surviving new_lab/conv blocks all die here
+        release(loop_handles)
+    metrics.update(ph.flat())
+    return leaf, n_leaf
 
-        # the previous round's checkpoints are superseded the moment this
-        # round's status collect materializes the new pair: release them
-        # NOW unless a resolved/kernel view still reads them (those are
-        # consumed when `leaf` materializes) — the loop then retains O(1)
-        # round tables instead of O(rounds), which at corpus scale is the
-        # difference between a bounded block-manager footprint and
-        # memory-squeezing dead state for the rest of the session
-        for h, contributed in prev_round:
-            (loop_handles.append(h) if contributed else _release([h]))
-        prev_round = [(_ckpt_rdd(new_lab),
-                       bool(counts.get("discrete"))),
-                      (_ckpt_rdd(conv),
-                       bool(counts.get("discrete"))
-                       or bool(counts.get("stalled")))]
 
-        n_active = counts.get("active", 0)
-        if n_active == 0 or it >= max_iterations:
-            if n_active and it >= max_iterations:
-                # over-budget components fall back to the kernel (the
-                # reference uses wall-clock timeouts per document,
-                # RunNQuadsTest.java:76)
-                kernel_parts.append(btri.join(
-                    _mb(conv.where(F.col("status") == "active")
-                        .select(*CK), n_active, broadcast_rows),
-                    CK, "left_semi"))
-                metrics["over_budget_comps"] = n_active
-            break
-
-        active = conv.where(F.col("status") == "active").select(*CK)
-        # lazy view over the checkpointed new_lab: both consumers (message
-        # join, previous-colour rows) rescan it through a broadcast
-        # semi-join — cheaper than materializing a fourth table per round
-        lab = new_lab.drop("oh0", "oh1") \
-            .join(_mb(active, n_active, broadcast_rows), CK, "left_semi")
-        conv_prev = conv.where(F.col("status") == "active") \
-            .select(*CK, F.col("nc").alias("prev_nc"))
-        n_act = n_active
-        n_lab_rows = bcounts.get("active", 0)
-
-        if ckpt is not None and it % checkpoint_every == 0:
-            res_u = resolved[0] if resolved else None
-            for p in (resolved[1:] if resolved else []):
-                res_u = res_u.union(p)
-            ker_u = kernel_parts[0] if kernel_parts else None
-            for p in (kernel_parts[1:] if kernel_parts else []):
-                ker_u = ker_u.union(p)
-            ckpt.commit(it, lab, conv_prev, res_u, ker_u)
-
-    metrics["colour_iterations"] = it
-    metrics["iterations_log"] = iter_log
-    metrics["t_loop_s"] = round(_time.time() - _t0, 3)
-    _t0 = _time.time()
-    # final-round tables feed the resolved/kernel views consumed by leaf
-    # below (incl. the over-budget path's conv reference) — release them
-    # with the rest of the loop-era state once leaf has materialized
-    loop_handles.extend(h for h, _ in prev_round)
-
-    # leaf colours: distributed-discrete ∪ kernel output (interned schema)
-    parts = list(resolved)
-    if kernel_parts:
-        kb = kernel_parts[0]
-        for p in kernel_parts[1:]:
-            kb = kb.union(p)
-        kc = _kernel_colors(kb, hash_name)
-        c0, c1 = _ikey("graph_id", "comp")
-        b0, b1 = _ikey("graph_id", "bnode")
-        parts.append(kc.select(c0.alias("ck0"), c1.alias("ck1"),
-                               b0.alias("bk0"), b1.alias("bk1"),
-                               "h0", "h1"))
-    if not parts:
-        # bnode-free corpus: the result references none of our state
-        empty = spark.createDataFrame(
-            [], "graph_id string, bnode string, label string")
-        _release(loop_handles + result_handles)
-        return CanonResult(triples.select(*TRIPLE_COLS).dropDuplicates(),
-                           empty, metrics)
-    leaf = parts[0]
-    for p in parts[1:]:
-        leaf = leaf.union(p)
-    leaf = leaf.localCheckpoint(True)
-    n_leaf = leaf.count()
-    # leaf (just materialized) was the last consumer of every loop-era
-    # table: the edge tables, the initial colours and each round's
-    # surviving new_lab/conv blocks all die here
-    _release(loop_handles)
-    # per-component broadcast bound: exact after a fresh round 1; on a
-    # resumed run only the still-active count was seen, so fall back to
-    # the safe per-bnode upper bound (components ≤ bnodes)
-    n_comps = metrics["n_components"] if restored is None else n_leaf
-    metrics["t_leaf_kernel_s"] = round(_time.time() - _t0, 3)
-    _t0 = _time.time()
-
-    # ---- per-component canonical hash + mux (GraphColouring.java:121-168,
-    # GraphLabelling.java:100-119) ----------------------------------------
-    # btrij: triple hash columns decorated with their endpoints' leaf
-    # colours, joined on interned long keys — all fixed-width longs, no
-    # strings; consumed once by the per-triple hash below.  leaf is
-    # per-bnode (≪ triples): broadcast when it fits so the decoration is
-    # map-side and btri is never re-exchanged — the distributed analogue
-    # of GraphColouring.labelBlankNodes's O(triples) single pass over an
-    # in-memory colour map (GraphColouring.java:433-451); above
-    # broadcast_rows both joins fall back to shuffles.
-    slab = _mb(
-        leaf.select(F.col("bk0").alias("_s0"), F.col("bk1").alias("_s1"),
-                    F.col("h0").alias("sc0"), F.col("h1").alias("sc1")),
-        n_leaf, broadcast_rows)
-    olab = _mb(
-        leaf.select(F.col("bk0").alias("_o0"), F.col("bk1").alias("_o1"),
-                    F.col("h0").alias("oc0"), F.col("h1").alias("oc1")),
-        n_leaf, broadcast_rows)
-    btrij = (
-        btri
-        .join(slab, on=[btri.ks0 == slab._s0, btri.ks1 == slab._s1],
-              how="left").drop("_s0", "_s1")
-        .join(olab, on=[btri.ko0 == olab._o0, btri.ko1 == olab._o1],
-              how="left").drop("_o0", "_o1")
-        .select("graph_id", "ck0", "ck1", "p0", "p1", "ss0", "ss1",
-                "os0", "os1", "sc0", "sc1", "oc0", "oc1")
-    )
-
-    tm0, tm1 = combine3_pairs_sql(
-        F.coalesce("sc0", "ss0"), F.coalesce("sc1", "ss1"),
-        F.col("p0"), F.col("p1"),
-        F.coalesce("oc0", "os0"), F.coalesce("oc1", "os1"))
-    # per-triple hash rows, deduplicated (set semantics; distinct triples
-    # have distinct (t0, t1) because leaf colours are injective, so this
-    # 4-long dropDuplicates IS triple dedup, far narrower than shuffling
-    # the string triples).  This one exchange is the tail's structural
-    # minimum: a pre-keyed single-exchange variant (repartition on
-    # (ck0, ck1) feeding both the distinct and the fold) measured a
-    # consistent +13% REGRESSION in an interleaved A/B at sf0.1 — the
-    # fold's second exchange is already collapsed by partial aggregation
-    # (per-partition lane sums ≈ n_comps × n_partitions rows at any
-    # scale), so the explicit keying only forfeits map-side dedup and the
-    # balanced 4-key hash (BENCH.md round 5).
-    th = btrij.select("ck0", "ck1", tm0.alias("t0"), tm1.alias("t1")) \
-        .dropDuplicates()
-    cd0, cd1 = _ikey("graph_id", "comp")
-    # ONE aggregation over the per-bnode comp table yields BOTH the
-    # (graph_id, comp) decode dictionary AND the component's bnode count
-    # (the groupBy is the distinct) — replaces a distinct + a separate
-    # leaf-side sizes aggregation + their two broadcast joins with one
-    comp_sizes = (node_comp.groupBy("graph_id", "comp")
-                  .agg(F.count("*").alias("nb"))
-                  .withColumn("ck0", cd0).withColumn("ck1", cd1))
-    # the component hash fold also emits the component's triple count
-    # (nt) from the same two passes — no separate aggregation over th
-    ghc = unordered_sum_pairs_sql(th, ["ck0", "ck1"], "t0", "t1",
-                                  "g0", "g1", extra_init=blank_pair,
-                                  count_col="nt") \
-        .join(_mb(comp_sizes, n_comps, broadcast_rows), ["ck0", "ck1"])
-
-    # duplicate-component key: with set-semantic input (deduped above) and
-    # injective leaf colours, (g0, g1) is the unordered fold over the
-    # component's exact distinct labelled triple set — the distributed
-    # analogue of the oracle's graphs_seen TreeSet equality
-    # (GraphLabelling.java:100-119); (nt, nb) guard the astronomically
-    # rare md5 digest collision between non-isomorphic components
-    dup_w = Window.partitionBy("graph_id", "g0", "g1", "nt", "nb") \
-                  .orderBy("comp")
-    comp_mux = (
-        ghc
-        .withColumn("rank", F.row_number().over(dup_w))
-        # duplicate mux ints: first copy 0, then count+1 = 2, 3, ...
-        # (GraphLabelling.java:100-119 passing count+1 to getCanonicalGraph)
-        .withColumn("mux_i",
-                    F.when(F.col("rank") == 1, F.lit(0))
-                    .otherwise(F.col("rank")) if dip else F.lit(0))
-        .withColumn("contributes",
-                    F.lit(True) if dip else (F.col("rank") == 1))
-        .withColumns(dict(zip(("mx0", "mx1"), mx_exprs(F.col("mux_i")))))
-        .select("graph_id", "ck0", "ck1", "contributes",
-                *(c.alias(n) for c, n in zip(combine2_pairs_sql(
-                    "g0", "g1", F.col("mx0"), F.col("mx1")),
-                    ("cb0", "cb1"))))
-    ).localCheckpoint(True)
-    comp_mux_h = _ckpt_rdd(comp_mux)
-    metrics["t_comp_mux_s"] = round(_time.time() - _t0, 3)
-    _t0 = _time.time()
-
-    # ---- upg: graph-level unique hash (GraphLabelling.java:137-150),
-    # merged into the per-component mux table so every downstream consumer
-    # needs ONE compact join + ONE combine3 (combine2(combine2(h,cb),gh)
-    # == combine3(h,cb,gh), identical lane arithmetic) ---------------------
-    if upg:
-        gs0, gs1 = tp(F.col("subj"))
-        gp0, gp1 = tp(F.col("pred"))
-        go0, go1 = tp(F.col("obj"))
-        gm0, gm1 = combine3_pairs_sql("a0", "a1", "b0", "b1", "c0", "c1")
-        ground_th = (ground.select(
-            "graph_id", gs0.alias("a0"), gs1.alias("a1"),
-            gp0.alias("b0"), gp1.alias("b1"),
-            go0.alias("c0"), go1.alias("c1"))
-            .select("graph_id", gm0.alias("t0"), gm1.alias("t1"))
-            .dropDuplicates())
-        comb_h = comp_mux.where("contributes").select(
-            "graph_id", F.col("cb0").alias("t0"), F.col("cb1").alias("t1"))
-        ghash = unordered_sum_pairs_sql(ground_th.union(comb_h),
-                                        ["graph_id"], "t0", "t1",
-                                        "gh0", "gh1",
-                                        extra_init=blank_pair)
-        # per-graph table, rows ≤ n_components
-        mux = comp_mux.join(_mb(ghash, n_comps, broadcast_rows),
-                            "graph_id") \
-            .select("ck0", "ck1", "cb0", "cb1", "gh0", "gh1")
-
-        def final_pair(h0, h1):
-            return combine3_pairs_sql(h0, h1, F.col("cb0"), F.col("cb1"),
-                                      F.col("gh0"), F.col("gh1"))
+def _tail(btri, ground, node_comp, leaf, n_leaf, n_comps, n_bnodes, tp,
+          hash_name, dip, upg, broadcast_rows, metrics):
+    """Phases comp_mux + mux (GraphColouring.java:121-168, GraphLabelling.
+    java:100-119): checkpointed final labels by bk, and by (graph, bnode)."""
+    blank_pair = enc_pair(get_hash_family(hash_name).blank)
+    # duplicate-mux digest: pure codegen for md5 (hash_int_pair_sql),
+    # Arrow UDF only for the non-default 16-byte families
+    if hash_name == "md5":
+        from blabel_spark.pair_kernels import hash_int_pair_sql
+        mx_exprs = hash_int_pair_sql
     else:
-        mux = comp_mux.select("ck0", "ck1", "cb0", "cb1")
+        _udf = hash_int_pair_udf_for(hash_name)
 
-        def final_pair(h0, h1):
-            return combine2_pairs_sql(h0, h1, F.col("cb0"), F.col("cb1"))
+        def mx_exprs(c):
+            p = _udf(c)
+            return p.getField("h0"), p.getField("h1")
+    with phase("comp_mux") as ph:
+        # btrij: triple hash columns decorated with their endpoints' leaf
+        # colours, joined on interned long keys — all fixed-width longs, no
+        # strings; consumed once by the per-triple hash below.  leaf is
+        # per-bnode (≪ triples): broadcast when it fits so the decoration is
+        # map-side and btri is never re-exchanged — the distributed analogue
+        # of GraphColouring.labelBlankNodes's O(triples) single pass over an
+        # in-memory colour map (GraphColouring.java:433-451); above
+        # broadcast_rows both joins fall back to shuffles.
+        slab = _mb(
+            leaf.select(F.col("bk0").alias("_s0"), F.col("bk1").alias("_s1"),
+                        F.col("h0").alias("sc0"), F.col("h1").alias("sc1")),
+            n_leaf, broadcast_rows)
+        olab = _mb(
+            leaf.select(F.col("bk0").alias("_o0"), F.col("bk1").alias("_o1"),
+                        F.col("h0").alias("oc0"), F.col("h1").alias("oc1")),
+            n_leaf, broadcast_rows)
+        btrij = (
+            btri
+            .join(slab, on=[btri.ks0 == slab._s0, btri.ks1 == slab._s1],
+                  how="left").drop("_s0", "_s1")
+            .join(olab, on=[btri.ko0 == olab._o0, btri.ko1 == olab._o1],
+                  how="left").drop("_o0", "_o1")
+            .select("graph_id", "ck0", "ck1", "p0", "p1", "ss0", "ss1",
+                    "os0", "os1", "sc0", "sc1", "oc0", "oc1")
+        )
 
-    # final per-bnode label: ONE final_pair fold over the per-bnode leaf
-    # table — the final colour is a pure function of (leaf colour,
-    # component mux row), so computing it per triple occurrence (as a
-    # fused in-row relabel would) repeats the same fold once per edge
-    fc0, fc1 = final_pair(F.col("h0"), F.col("h1"))
-    leaf_final = (
-        leaf.join(_mb(mux, n_comps, broadcast_rows), ["ck0", "ck1"])
-        .select("bk0", "bk1",
-                F.concat(F.lit("_:SK00"), pair_hex(fc0, fc1))
-                .alias("label"))
-    ).localCheckpoint(True)
-    # leaf_final (just materialized) supersedes both the raw leaf colours
-    # and the per-component mux table — release them; the result now rides
-    # on exactly three checkpoints: btri, node_comp, leaf_final
-    _release([_ckpt_rdd(leaf), comp_mux_h])
-    result_handles.append(_ckpt_rdd(leaf_final))
-    # bnode decode dictionary: the CC node table already holds one row per
-    # distinct (graph, bnode) and is checkpointed — attach keys by codegen,
-    # no extra distinct shuffle
-    dk0, dk1 = _ikey("graph_id", "bnode")
-    bnode_dict = node_comp.select("graph_id", "bnode",
-                                  dk0.alias("bk0"), dk1.alias("bk1"))
-    labels = (leaf_final
-              .join(_mb(bnode_dict, n_bnodes, broadcast_rows),
-                    ["bk0", "bk1"])
-              .select("graph_id", "bnode", "label"))
-    metrics["t_mux_s"] = round(_time.time() - _t0, 3)
+        tm0, tm1 = combine3_pairs_sql(
+            F.coalesce("sc0", "ss0"), F.coalesce("sc1", "ss1"),
+            F.col("p0"), F.col("p1"),
+            F.coalesce("oc0", "os0"), F.coalesce("oc1", "os1"))
+        # per-triple hash rows, deduplicated (set semantics; distinct triples
+        # have distinct (t0, t1) because leaf colours are injective, so this
+        # 4-long dropDuplicates IS triple dedup, far narrower than shuffling
+        # the string triples).  This one exchange is the tail's structural
+        # minimum: a pre-keyed single-exchange variant (repartition on
+        # (ck0, ck1) feeding both the distinct and the fold) measured a
+        # consistent +13% REGRESSION in an interleaved A/B at sf0.1 — the
+        # fold's second exchange is already collapsed by partial aggregation
+        # (per-partition lane sums ≈ n_comps × n_partitions rows at any
+        # scale), so the explicit keying only forfeits map-side dedup and the
+        # balanced 4-key hash (BENCH.md round 5).
+        th = btrij.select("ck0", "ck1", tm0.alias("t0"), tm1.alias("t1")) \
+            .dropDuplicates()
+        cd0, cd1 = _ikey("graph_id", "comp")
+        # ONE aggregation over the per-bnode comp table yields BOTH the
+        # (graph_id, comp) decode dictionary AND the component's bnode count
+        # (the groupBy is the distinct) — replaces a distinct + a separate
+        # leaf-side sizes aggregation + their two broadcast joins with one
+        comp_sizes = (node_comp.groupBy("graph_id", "comp")
+                      .agg(F.count("*").alias("nb"))
+                      .withColumn("ck0", cd0).withColumn("ck1", cd1))
+        # the component hash fold also emits the component's triple count
+        # (nt) from the same two passes — no separate aggregation over th
+        ghc = unordered_sum_pairs_sql(th, ["ck0", "ck1"], "t0", "t1",
+                                      "g0", "g1", extra_init=blank_pair,
+                                      count_col="nt") \
+            .join(_mb(comp_sizes, n_comps, broadcast_rows), ["ck0", "ck1"])
 
-    # ---- relabel (GraphColouring.labelBlankNodes): two map-side joins of
-    # the original triples against the per-bnode label dictionary on
-    # interned long keys — no per-triple hash folds, no string-keyed joins
-    sl = _mb(leaf_final.select(F.col("bk0").alias("_s0"),
-                               F.col("bk1").alias("_s1"),
-                               F.col("label").alias("_slab")),
-             n_leaf, broadcast_rows)
-    ol = _mb(leaf_final.select(F.col("bk0").alias("_o0"),
-                               F.col("bk1").alias("_o1"),
-                               F.col("label").alias("_olab")),
-             n_leaf, broadcast_rows)
-    labelled = (
-        btri
-        .join(sl, on=[btri.ks0 == sl._s0, btri.ks1 == sl._s1], how="left")
-        .join(ol, on=[btri.ko0 == ol._o0, btri.ko1 == ol._o1], how="left")
-        .select("graph_id",
-                F.coalesce("_slab", "subj").alias("subj"),
-                "pred",
-                F.coalesce("_olab", "obj").alias("obj"))
-        .union(ground)
-        .dropDuplicates()
-    )
-    return CanonResult(labelled, labels, metrics,
-                       _retained=result_handles)
+        # duplicate-component key: with set-semantic input (deduped above) and
+        # injective leaf colours, (g0, g1) is the unordered fold over the
+        # component's exact distinct labelled triple set — the distributed
+        # analogue of the oracle's graphs_seen TreeSet equality
+        # (GraphLabelling.java:100-119); (nt, nb) guard the astronomically
+        # rare md5 digest collision between non-isomorphic components
+        dup_w = Window.partitionBy("graph_id", "g0", "g1", "nt", "nb") \
+                      .orderBy("comp")
+        comp_mux = (
+            ghc
+            .withColumn("rank", F.row_number().over(dup_w))
+            # duplicate mux ints: first copy 0, then count+1 = 2, 3, ...
+            # (GraphLabelling.java:100-119: count+1 to getCanonicalGraph)
+            .withColumn("mux_i",
+                        F.when(F.col("rank") == 1, F.lit(0))
+                        .otherwise(F.col("rank")) if dip else F.lit(0))
+            .withColumn("contributes",
+                        F.lit(True) if dip else (F.col("rank") == 1))
+            .withColumns(dict(zip(("mx0", "mx1"), mx_exprs(F.col("mux_i")))))
+            .select("graph_id", "ck0", "ck1", "contributes",
+                    *(c.alias(n) for c, n in zip(combine2_pairs_sql(
+                        "g0", "g1", F.col("mx0"), F.col("mx1")),
+                        ("cb0", "cb1"))))
+        ).localCheckpoint(True)
+    metrics.update(ph.flat())
+
+    with phase("mux") as ph:
+        # upg: graph-level unique hash (GraphLabelling.java:137-150), merged
+        # into the per-component mux table so every downstream consumer
+        # needs ONE compact join + ONE combine3 (combine2(combine2(h,cb),gh)
+        # == combine3(h,cb,gh), identical lane arithmetic)
+        if upg:
+            gs0, gs1 = tp(F.col("subj"))
+            gp0, gp1 = tp(F.col("pred"))
+            go0, go1 = tp(F.col("obj"))
+            gm0, gm1 = combine3_pairs_sql("a0", "a1", "b0", "b1", "c0", "c1")
+            ground_th = (ground.select(
+                "graph_id", gs0.alias("a0"), gs1.alias("a1"),
+                gp0.alias("b0"), gp1.alias("b1"),
+                go0.alias("c0"), go1.alias("c1"))
+                .select("graph_id", gm0.alias("t0"), gm1.alias("t1"))
+                .dropDuplicates())
+            comb_h = comp_mux.where("contributes").select(
+                "graph_id", F.col("cb0").alias("t0"), F.col("cb1").alias("t1"))
+            ghash = unordered_sum_pairs_sql(ground_th.union(comb_h),
+                                            ["graph_id"], "t0", "t1",
+                                            "gh0", "gh1",
+                                            extra_init=blank_pair)
+            # per-graph table, rows ≤ n_components
+            mux = comp_mux.join(_mb(ghash, n_comps, broadcast_rows),
+                                "graph_id") \
+                .select("ck0", "ck1", "cb0", "cb1", "gh0", "gh1")
+
+            def final_pair(h0, h1):
+                return combine3_pairs_sql(h0, h1, F.col("cb0"), F.col("cb1"),
+                                          F.col("gh0"), F.col("gh1"))
+        else:
+            mux = comp_mux.select("ck0", "ck1", "cb0", "cb1")
+
+            def final_pair(h0, h1):
+                return combine2_pairs_sql(h0, h1, F.col("cb0"), F.col("cb1"))
+
+        # final per-bnode label: ONE final_pair fold over the per-bnode leaf
+        # table — the final colour is a pure function of (leaf colour,
+        # component mux row), so computing it per triple occurrence (as a
+        # fused in-row relabel would) repeats the same fold once per edge
+        fc0, fc1 = final_pair(F.col("h0"), F.col("h1"))
+        leaf_final = (
+            leaf.join(_mb(mux, n_comps, broadcast_rows), ["ck0", "ck1"])
+            .select("bk0", "bk1",
+                    F.concat(F.lit("_:SK00"), pair_hex(fc0, fc1))
+                    .alias("label"))
+        ).localCheckpoint(True)
+        # leaf_final (just materialized) supersedes both the raw leaf colours
+        # and the per-component mux table — release them; the result now
+        # rides on exactly three checkpoints: btri, node_comp, leaf_final
+        release([ckpt_rdd(leaf), ckpt_rdd(comp_mux)])
+        # bnode decode dictionary: the CC node table already holds one row
+        # per distinct (graph, bnode) and is checkpointed — attach keys by
+        # codegen, no extra distinct shuffle
+        dk0, dk1 = _ikey("graph_id", "bnode")
+        bnode_dict = node_comp.select("graph_id", "bnode",
+                                      dk0.alias("bk0"), dk1.alias("bk1"))
+        labels = (leaf_final
+                  .join(_mb(bnode_dict, n_bnodes, broadcast_rows),
+                        ["bk0", "bk1"])
+                  .select("graph_id", "bnode", "label"))
+    metrics.update(ph.flat())
+    return leaf_final, labels
+
+
+def _relabel(btri, ground, leaf_final, n_leaf, broadcast_rows, metrics):
+    """GraphColouring.labelBlankNodes: two map-side joins of the original
+    triples against the per-bnode label dictionary on interned long keys
+    — no per-triple hash folds, no string-keyed joins."""
+    with phase("relabel") as ph:
+        sl = _mb(leaf_final.select(F.col("bk0").alias("_s0"),
+                                   F.col("bk1").alias("_s1"),
+                                   F.col("label").alias("_slab")),
+                 n_leaf, broadcast_rows)
+        ol = _mb(leaf_final.select(F.col("bk0").alias("_o0"),
+                                   F.col("bk1").alias("_o1"),
+                                   F.col("label").alias("_olab")),
+                 n_leaf, broadcast_rows)
+        labelled = (
+            btri
+            .join(sl, on=[btri.ks0 == sl._s0, btri.ks1 == sl._s1], how="left")
+            .join(ol, on=[btri.ko0 == ol._o0, btri.ko1 == ol._o1], how="left")
+            .select("graph_id",
+                    F.coalesce("_slab", "subj").alias("subj"),
+                    "pred",
+                    F.coalesce("_olab", "obj").alias("obj"))
+            .union(ground)
+            .dropDuplicates()
+        )
+    metrics.update(ph.flat())
+    return labelled
 
 
 # ---------------------------------------------------------------------------
@@ -1227,4 +1206,4 @@ def canonicalize_by_graph(spark: SparkSession, triples: DataFrame, *,
             (r["graph_id"], r["a"])
             for r in out.where(F.col("kind") == "e").limit(5).collect()]
     return CanonResult(labelled, labels, metrics,
-                       _retained=[_ckpt_rdd(out)])
+                       _retained=[ckpt_rdd(out)])

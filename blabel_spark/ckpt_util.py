@@ -6,9 +6,6 @@ released the moment their last consumer has materialized (the
 ContextCleaner only frees them after a driver full-GC, which a large heap
 may not run for hours).  ``ckpt_rdd`` fetches the JVM handle backing a
 checkpointed DataFrame; ``release`` unpersists tracked handles.
-
-Previously private helpers of canon.distributed; ops.dedup's cluster loop
-uses the same discipline, so they live in a neutral module (ADVICE r5).
 """
 
 from __future__ import annotations
@@ -34,15 +31,14 @@ def ckpt_rdd(df: DataFrame):
         return None
 
 
-def release(handles) -> None:
-    """Non-blocking unpersist of tracked checkpoint RDD handles.  Only
-    sound once every downstream consumer of the blocks has materialized
-    (checkpoint lineage is truncated — a late consumer could not
-    recompute them)."""
+def release(handles, blocking: bool = False) -> None:
+    """Unpersist tracked checkpoint RDD handles.  Only sound once every
+    downstream consumer of the blocks has materialized (checkpoint
+    lineage is truncated — a late consumer could not recompute them)."""
     for h in handles:
         if h is None:
             continue
         try:
-            h.unpersist(False)
+            h.unpersist(blocking)
         except Exception:  # pragma: no cover — context already stopped
             pass

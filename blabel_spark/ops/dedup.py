@@ -293,7 +293,10 @@ def dedup_clusters(pairs: DataFrame, max_iter: int = 32,
         .localCheckpoint(True)
     edges_h = _ckpt_rdd(edges)
     if edges.count() <= kernel_max_pairs:
-        return _cluster_kernel(edges)
+        # materialized first, so the edge blocks can go as on the loop route
+        clusters = _cluster_kernel(edges).localCheckpoint(True)
+        _release([edges_h])
+        return clusters
     sym = edges.union(edges.select(F.col("b").alias("a"),
                                    F.col("a").alias("b")))
     comp = (sym.select(F.col("a").alias("doc_id")).distinct()

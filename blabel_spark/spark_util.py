@@ -86,18 +86,17 @@ def get_spark(app: str = "blabel-spark", cpus: int | None = None,
         .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "8m")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # joins: let the planner pick shuffled-hash over sort-merge when a
-        # side fits a per-partition hash map (guide §3.1/§9) — removes the
-        # two sorts from every mid-size equi-join; the AQE local-map
-        # threshold bounds the runtime SMJ→SHJ rewrite so a mis-estimated
-        # build side cannot OOM a task (per-partition cap, scale-safe)
+        # side fits a per-partition hash map (guide §3.1/§9).  The AQE
+        # local-map threshold caps only the runtime SMJ→SHJ rewrite: an SHJ
+        # planned statically from estimated stats has no per-partition cap,
+        # and its build side does not spill, so a mis-estimate can OOM
         .config("spark.sql.join.preferSortMergeJoin", "false")
         .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
                 os.environ.get("SPARK_GRAFT_SHJ_LOCAL_MAP", "64m"))
-        # the fixpoint loop marks BOTH its per-round tables (colours +
-        # convergence) for LAZY local checkpointing and materializes them
-        # with ONE action; RDD.doCheckpoint stops at the first marked
-        # ancestor unless this is set, which would leave the inner table's
-        # lineage untruncated → exponentially growing plans across rounds
+        # read per RDD from local properties, which SQL execution fills from
+        # the session confs: one fixpoint status collect then truncates both
+        # marked round tables (without it the colour table truncates a
+        # round later: one more stage per round; plans stay flat)
         .config("spark.checkpoint.checkpointAllMarkedAncestors", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory",

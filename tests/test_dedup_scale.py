@@ -199,3 +199,27 @@ def test_embedding_near_dups_finds_planted_pairs(spark):
     # one boundary miss, require no false positives below threshold
     assert len(found) >= len(planted) - 1, planted - set(got)
     assert all(sim >= 0.95 for sim in got.values())
+
+
+def test_dedup_clusters_kernel_route_releases_edges(spark):
+    """The kernel route materializes its clusters and then releases the
+    distinct-edge checkpoint, as the loop route does: after a call, at
+    most the result's own checkpoint is left among the persistent RDDs."""
+    from blabel_spark.ckpt_util import ckpt_rdd, release
+    from blabel_spark.ops.dedup import dedup_clusters
+
+    def persistent_ids():
+        jmap = spark.sparkContext._jsc.getPersistentRDDs()
+        return {int(k) for k in jmap.keySet().toArray()}
+
+    pairs = spark.createDataFrame([(1, 2), (2, 3), (7, 8)],
+                                  "doc_a long, doc_b long")
+    before = persistent_ids()
+    out = dedup_clusters(pairs)
+    assert {(r["doc_id"], r["keeper_doc_id"]) for r in out.collect()} == {
+        (1, 1), (2, 1), (3, 1), (7, 7), (8, 7)}
+    h = ckpt_rdd(out)
+    left = persistent_ids() - before
+    assert left <= ({h.id()} if h is not None else set()), (
+        f"kernel route left {len(left)} checkpointed RDDs behind")
+    release([h], blocking=True)
